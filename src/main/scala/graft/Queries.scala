@@ -4024,11 +4024,21 @@ object Queries {
   private val refData = "/root/reference/tests/data"
   private def refExists: Boolean = new java.io.File(refData).isDirectory
 
+  /** Zero rows with a query's declared schema (DDL): a missing fixture
+    * gives a typed empty result, never a zero-column frame. */
+  private def emptyOf(s: SparkSession, ddl: String): DataFrame =
+    s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** The genome fixture's signatures, or none (same schema) without it. */
+  private def genomeSigs(s: SparkSession): DataFrame =
+    if (refExists) SignatureJson.read(s, s"$refData/genome-s10+s11.sig")
+    else SignatureJson.empty(s)
+
   private val sourmash: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1/S2: signature JSON scan + flatten + md5 recompute check
     "sm01_signature_load" -> { (s, _) =>
-      if (!refExists) s.emptyDataFrame.select()
-      else SignatureJson.read(s, s"$refData/genome-s10+s11.sig")
+      genomeSigs(s)
         .withColumn("md5_recomputed",
           SignatureJson.computeMd5sum(col("ksize"), col("mins")))
         .select(col("name"), col("ksize"), col("is_protein"), col("num"),
@@ -4038,7 +4048,7 @@ object Queries {
     },
     // Q1/Q2/Q3: linear search with the v5 fixture's golden thresholds
     "sm02_linear_search" -> { (s, _) =>
-      if (!refExists) s.emptyDataFrame.select()
+      if (!refExists) emptyOf(s, "mode STRING, threshold DOUBLE, n_matches BIGINT")
       else {
         val db = SignatureJson.read(s, s"$refData/.sbt.v5/*")
           .where(col("md5sum") =!= lit("")) // leaf sigs only
@@ -4058,7 +4068,7 @@ object Queries {
     // saved-SBT analog), search through it, reproduce the same golden
     // counts as the linear scan — the posting pre-filter is exact
     "sm05_indexed_search" -> { (s, _) =>
-      if (!refExists) s.emptyDataFrame.select()
+      if (!refExists) emptyOf(s, "mode STRING, threshold DOUBLE, n_matches BIGINT")
       else {
         val db = SignatureJson.read(s, s"$refData/.sbt.v5/*")
           .where(col("md5sum") =!= lit(""))
@@ -4078,24 +4088,23 @@ object Queries {
     },
     // S6: serialize → reparse round-trip (writer correctness as a query)
     "sm03_signature_roundtrip" -> { (s, _) =>
-      if (!refExists) s.emptyDataFrame.select()
-      else {
-        import s.implicits._
-        val orig = SignatureJson.read(s, s"$refData/genome-s10+s11.sig")
+      import s.implicits._
+      val orig = genomeSigs(s)
+      val reread = if (!refExists) SignatureJson.empty(s) else {
         val json = SignatureJson.toJson(orig).select(col("json")).as[String].head()
         val tmp = java.nio.file.Files.createTempDirectory("sig_rt")
         val f = tmp.resolve("rt.sig")
         java.nio.file.Files.writeString(f, json)
-        val reread = SignatureJson.read(s, f.toString)
-        orig.select(col("name"), col("ksize"), col("is_protein"),
-            col("md5sum"), col("mins")).as("o")
-          .join(reread.select(col("name"), col("ksize"), col("is_protein"),
-            col("md5sum").as("md5_rt"), col("mins").as("mins_rt")).as("r"),
-            Seq("name", "ksize", "is_protein"))
-          .select(col("name"), col("ksize"), col("is_protein"),
-            (col("md5sum") === col("md5_rt")).as("md5_ok"),
-            (col("mins") === col("mins_rt")).as("mins_ok"))
+        SignatureJson.read(s, f.toString)
       }
+      orig.select(col("name"), col("ksize"), col("is_protein"),
+          col("md5sum"), col("mins")).as("o")
+        .join(reread.select(col("name"), col("ksize"), col("is_protein"),
+          col("md5sum").as("md5_rt"), col("mins").as("mins_rt")).as("r"),
+          Seq("name", "ksize", "is_protein"))
+        .select(col("name"), col("ksize"), col("is_protein"),
+          (col("md5sum") === col("md5_rt")).as("md5_ok"),
+          (col("mins") === col("mins_rt")).as("mins_ok"))
     },
     // K8: finch interop — From<MinHashKmers> over a deterministic
     // finch-format fixture; the oracle re-derives the conversion from the
@@ -4131,27 +4140,24 @@ object Queries {
     // genome fixture's four sketches are downsampled at two scaled
     // factors; the oracle filters the fixture JSON's mins independently.
     "sm08_downsample" -> { (s, _) =>
-      if (!refExists) s.emptyDataFrame.select()
-      else {
-        val db = SignatureJson.read(s, s"$refData/genome-s10+s11.sig")
-        // factors chosen to CUT this fixture (its bottom-500 mins all sit
-        // below 2^64/1000, so small factors would be no-ops): 200k keeps
-        // 2-10 mins per sketch, 2M keeps 0-2 (incl. genuinely empty
-        // results — null first/last)
-        Seq(200000L, 2000000L).map { scaled =>
-          val mh = graft.core.SketchConfig.scaledToMaxHash(scaled)
-          db.select(col("name"), col("ksize"), col("is_protein"),
-              lit(scaled).as("scaled"), lit(mh).as("max_hash"),
-              graft.functions.GraftFunctions.downsampleMins(col("mins"), mh).as("dmins"))
-            .select(col("name"), col("ksize"), col("is_protein"),
-              col("scaled"), col("max_hash"),
-              size(col("dmins")).as("n_mins"),
-              when(size(col("dmins")) > 0, element_at(col("dmins"), 1))
-                .as("first_min"),
-              when(size(col("dmins")) > 0,
-                element_at(col("dmins"), size(col("dmins")))).as("last_min"))
-        }.reduce(_ union _)
-      }
+      val db = genomeSigs(s)
+      // factors chosen to CUT this fixture (its bottom-500 mins all sit
+      // below 2^64/1000, so small factors would be no-ops): 200k keeps
+      // 2-10 mins per sketch, 2M keeps 0-2 (incl. genuinely empty
+      // results — null first/last)
+      Seq(200000L, 2000000L).map { scaled =>
+        val mh = graft.core.SketchConfig.scaledToMaxHash(scaled)
+        db.select(col("name"), col("ksize"), col("is_protein"),
+            lit(scaled).as("scaled"), lit(mh).as("max_hash"),
+            graft.functions.GraftFunctions.downsampleMins(col("mins"), mh).as("dmins"))
+          .select(col("name"), col("ksize"), col("is_protein"),
+            col("scaled"), col("max_hash"),
+            size(col("dmins")).as("n_mins"),
+            when(size(col("dmins")) > 0, element_at(col("dmins"), 1))
+              .as("first_min"),
+            when(size(col("dmins")) > 0,
+              element_at(col("dmins"), size(col("dmins")))).as("last_min"))
+      }.reduce(_ union _)
     },
     "sm07_abund_similarity" -> { (s, _) =>
       val path = s"${derivedDir("sm")}/finch_demo.json"
@@ -4391,7 +4397,7 @@ object Queries {
     },
     // Q8 top-N report: threshold + orderBy + limit over linear search
     "sm04_search_topn" -> { (s, _) =>
-      if (!refExists) s.emptyDataFrame.select()
+      if (!refExists) emptyOf(s, "filename STRING, score DOUBLE")
       else {
         val db = SignatureJson.read(s, s"$refData/.sbt.v5/*")
         val cfg = graft.core.SketchConfig(num = 500, ksize = 31)

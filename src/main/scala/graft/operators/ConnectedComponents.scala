@@ -12,11 +12,20 @@ import org.apache.spark.sql.functions._
  * assignments, not tree shape (SURVEY.md §2.4 Q7).
  *
  * Scale design:
- *  - provably convergent in O(log n) rounds on any graph (vs min-label
- *    propagation's O(diameter) — adversarial dup chains are real at web
- *    scale);
- *  - every round is two shuffles (groupBy min + join), partitioned by
- *    node id; AQE coalesces as components collapse;
+ *  - the first job (the one that runs the caller's upstream plan) also
+ *    contracts the edge set: after the canonical `distinct`, a union-find
+ *    over each partition turns its edges into `(min id, member)` stars.
+ *    Node set and connectivity are kept, so are components and labels;
+ *  - when that job has one partition, the union-find saw every edge and
+ *    its stars are the answer: no loop round runs. The path is chosen by
+ *    the partition count Spark's planning gave the edge set, not by a
+ *    size threshold;
+ *  - otherwise large-star / small-star rounds run on the contracted
+ *    edges, provably convergent in O(log n) rounds on any graph (vs
+ *    min-label propagation's O(diameter) — adversarial dup chains are
+ *    real at web scale). A round is two windows (min over each node's
+ *    neighborhood, partitioned by node id) plus a `distinct`, with AQE
+ *    off: one job per round;
  *  - `localCheckpoint` per round cuts the lineage chain (on a cluster this
  *    becomes a checkpoint-table write, giving partition-exact resume).
  */
@@ -51,7 +60,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
   /**
    * @param edges two Long columns `src`, `dst` (undirected, dups ok).
    * @param loopShufflePartitions explicit in-loop shuffle width (0 = size
-   *        from the edge count via [[chooseLoopWidth]]).
+   *        from the contracted edge count via [[chooseLoopWidth]]).
    * @param edgesPerPartition target edges per reducer when auto-sizing.
    * @return DataFrame (id: Long, component: Long) — component = min node
    *         id reachable; covers only nodes appearing in `edges`.
@@ -62,46 +71,74 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // The initial checkpoint drags the caller's WHOLE upstream plan with
+    // The first checkpoint drags the caller's WHOLE upstream plan with
     // it (sketching, banding, confirm at corpus scale) — it must run
-    // under the session's own parallelism and AQE settings. The edge
-    // count rides on the SAME job as an observed metric (no separate
-    // count action), and is only requested when auto-sizing needs it.
+    // under the session's own parallelism and AQE settings. The same job
+    // contracts each partition to a star forest, and the contracted edge
+    // count and signature ride on it as observed metrics (no separate
+    // count action).
     val obs0 = org.apache.spark.sql.Observation()
-    var e = edges.select($"src", $"dst").where($"src" =!= $"dst")
+    val contracted = edges.select($"src", $"dst").where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
       .distinct()
-      .observe(obs0, count(lit(1)).as("edges"))
+      .as[(Long, Long)].mapPartitions(contract).toDF("src", "dst")
+      .observe(obs0, count(lit(1)).as("edges"), edgeSig.as("sig"))
       .localCheckpoint(true)
 
-    // From here on, per-round data (the edge set) is orders of magnitude
-    // smaller than the corpus, but each round is a chain of tiny shuffles:
-    // under AQE every query stage materializes as its own job, so a round
-    // costs 4-6 driver scheduling barriers — a pure serial term that
-    // dominates the pipeline's scaling efficiency. Run the loop with AQE
-    // off and an explicit width from chooseLoopWidth (one pipelined job
-    // per round locally; edge-count-proportional on a big graph); restore
-    // the session confs after. Session conf values are parsed defensively
-    // BEFORE anything is mutated (a non-numeric value, e.g. a managed
-    // platform's "auto", must not leave AQE disabled for the session).
+    // One partition means the union-find saw every edge: its stars are
+    // already the min-rooted star forest the loop converges to.
+    val stars = if (contracted.queryExecution.toRdd.getNumPartitions <= 1) contracted
+      else starLoop(contracted, obs0, maxIter, loopShufflePartitions, edgesPerPartition)
+
+    // The edge set is a star stored canonically as (src = component min,
+    // dst = member). Returned LAZY: the agg reads the checkpointed star
+    // edges, so consumers run it under the session confs (AQE on).
+    stars.select($"dst".as("id"), $"src".as("component"))
+      .union(stars.select($"src".as("id"), $"src".as("component")))
+      .groupBy($"id").agg(min($"component").as("component"))
+  }
+
+  /** Order-independent edge-set signature (bit_xor avoids ANSI overflow). */
+  private def edgeSig = coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))
+
+  /**
+   * Large-star / small-star rounds from the contracted edge set `e0` until
+   * a round leaves the edge set unchanged. `obs0` is the observation of
+   * `e0`'s checkpoint job: its edge count sizes the loop, and its
+   * signature seeds the convergence check, so an `e0` that is already
+   * stars converges after one round. Duplicate stars across partitions
+   * can only fail that first comparison (one more round), never pass it.
+   */
+  private def starLoop(e0: DataFrame, obs0: org.apache.spark.sql.Observation,
+      maxIter: Int, loopShufflePartitions: Int, edgesPerPartition: Long): DataFrame = {
+    val spark = e0.sparkSession
+    import spark.implicits._
+
+    // Per-round data (the edge set) is orders of magnitude smaller than
+    // the corpus, but each round is a chain of tiny shuffles: under AQE
+    // every query stage materializes as its own job, so a round costs 4-6
+    // driver scheduling barriers — a pure serial term. Run the loop with
+    // AQE off and an explicit width from chooseLoopWidth (one pipelined
+    // job per round locally; edge-count-proportional on a big graph);
+    // restore the session confs after. Session conf values are parsed
+    // defensively BEFORE anything is mutated (a non-numeric value, e.g. a
+    // managed platform's "auto", must not leave AQE disabled).
     val conf = spark.conf
     val aqeBefore = conf.get("spark.sql.adaptive.enabled", "true")
     val partsBefore = conf.get("spark.sql.shuffle.partitions", "200")
     val sessionParts = scala.util.Try(partsBefore.trim.toInt).getOrElse(200)
-    // explicit override short-circuits: the edge count is irrelevant then,
-    // so don't even read the observed metric (ADVICE r3). Otherwise it
-    // came for free with the checkpoint job above.
-    val loopWidth = if (loopShufflePartitions > 0) loopShufflePartitions
-      else chooseLoopWidth(obs0.get("edges").asInstanceOf[Long], 0,
-        sessionParts, edgesPerPartition)
-    logWarning(s"[cc] loop shuffle width=$loopWidth (session=$partsBefore)")
+    val m0 = obs0.get
+    var lastSig = (m0("edges").asInstanceOf[Long], m0("sig").asInstanceOf[Long])
+    val loopWidth = chooseLoopWidth(lastSig._1, loopShufflePartitions,
+      sessionParts, edgesPerPartition)
+    logInfo(s"[cc] loop shuffle width=$loopWidth (session=$partsBefore)")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
     try {
 
+    var e = e0
     var iter = 0
     var converged = false
-    var lastSig: (Long, Long) = (-1L, -1L)
     val wSrc = org.apache.spark.sql.expressions.Window.partitionBy($"src")
     while (!converged && iter < maxIter) {
       // ---- large-star: for every node u, connect its larger neighbors to
@@ -120,18 +157,15 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       //      emitted per-row with duplicates — the terminal distinct dedups)
       val dir = ls.select(greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
         .withColumn("m", min($"dst").over(wSrc))
-      // the order-independent edge-set signature (bit_xor avoids ANSI
-      // overflow) is an OBSERVED metric of the checkpoint job itself —
-      // one driver barrier per round, not two (checkpoint + separate agg
-      // was half the loop's serial term)
+      // the signature is an OBSERVED metric of the checkpoint job itself —
+      // one driver barrier per round, not two
       val obs = org.apache.spark.sql.Observation()
       val ss = dir.select($"dst".as("src"), $"m".as("dst"))
         .union(dir.select($"src", $"m".as("dst")))
         .where($"src" =!= $"dst")
         .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
         .distinct()
-        .observe(obs, count(lit(1)).as("edges"),
-          coalesce(bit_xor(xxhash64($"src", $"dst")), lit(0L)).as("sig"))
+        .observe(obs, count(lit(1)).as("edges"), edgeSig.as("sig"))
         .localCheckpoint(true)
 
       val m = obs.get
@@ -140,27 +174,30 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       lastSig = sig
       e = ss
       iter += 1
-      logWarning(s"[cc] round $iter edges=${sig._1} sig=${sig._2} converged=$converged")
+      logInfo(s"[cc] round $iter edges=${sig._1} sig=${sig._2} converged=$converged")
     }
-    // no maxIter=0 escape hatch: skipping the loop would return
-    // min-direct-neighbor labels, which are NOT components — an error
-    // beats a silently non-transitive labeling
+    // no maxIter=0 escape hatch: stopping early would return partly
+    // contracted stars, which are NOT components — an error beats a
+    // silently non-transitive labeling
     require(converged, s"connected components did not converge in $maxIter rounds")
-
-    // After convergence the edge set is a star stored canonically as
-    // (src = component min, dst = member). Returned LAZY: the agg reads
-    // the checkpointed star edges, so consumers run it under the restored
-    // session confs (AQE on) — and the loop pays no extra barrier for it
-    // (round-3's eager checkpoint here was one more driver action buying
-    // nothing: the plan below is two narrow scans of cached blocks).
-    e.select($"dst".as("id"), $"src".as("component"))
-      .union(e.select($"src".as("id"), $"src".as("component")))
-      .groupBy($"id").agg(min($"component").as("component"))
+    e
 
     } finally {
       conf.set("spark.sql.adaptive.enabled", aqeBefore)
       conf.set("spark.sql.shuffle.partitions", partsBefore)
     }
+  }
+
+  /**
+   * Contract one partition's edges: a union-find over them, emitted as one
+   * `(root, member)` star edge per non-root node, root = the min id of its
+   * local component. Node set and connectivity are unchanged, so are the
+   * components and their min-id labels.
+   */
+  private def contract(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val uf = new UnionFind
+    edges.foreach { case (a, b) => uf.union(uf.index(a), uf.index(b)) }
+    uf.stars
   }
 
   /**
@@ -179,4 +216,69 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       .join(lbl, Seq("id"), "left")
       .select($"id", coalesce($"component", $"id").as("component"))
   }
+}
+
+/**
+ * Union-find over Long node ids with the min id as every root. Nodes get
+ * dense indices through a primitive open-addressing table, so memory is
+ * linear in the distinct nodes and nothing is boxed.
+ */
+private final class UnionFind {
+  private var ids = new Array[Long](64) // index -> node id
+  private var parent = new Array[Int](64) // index -> parent index
+  private var slots = new Array[Int](128) // hash slot -> index + 1, 0 = empty
+  private var n = 0
+
+  private def slot(id: Long, mask: Int): Int =
+    java.lang.Long.hashCode(id * 0x9E3779B97F4A7C15L) & mask
+
+  /** Dense index of `id`, added as its own root on first sight. */
+  def index(id: Long): Int = {
+    val mask = slots.length - 1
+    var h = slot(id, mask)
+    while (slots(h) != 0) {
+      if (ids(slots(h) - 1) == id) return slots(h) - 1
+      h = (h + 1) & mask
+    }
+    if (n == ids.length) {
+      ids = java.util.Arrays.copyOf(ids, 2 * n)
+      parent = java.util.Arrays.copyOf(parent, 2 * n)
+    }
+    ids(n) = id
+    parent(n) = n
+    slots(h) = n + 1
+    n += 1
+    if (2 * n > slots.length) grow()
+    n - 1
+  }
+
+  private def grow(): Unit = {
+    slots = new Array[Int](2 * slots.length)
+    val mask = slots.length - 1
+    var i = 0
+    while (i < n) {
+      var h = slot(ids(i), mask)
+      while (slots(h) != 0) h = (h + 1) & mask
+      slots(h) = i + 1
+      i += 1
+    }
+  }
+
+  def find(x: Int): Int = {
+    var r = x
+    while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+    r
+  }
+
+  def union(a: Int, b: Int): Unit = {
+    val ra = find(a)
+    val rb = find(b)
+    if (ids(ra) < ids(rb)) parent(rb) = ra else if (ra != rb) parent(ra) = rb
+  }
+
+  /** One `(root id, member id)` edge per non-root node. */
+  def stars: Iterator[(Long, Long)] =
+    Iterator.range(0, n).map(i => (find(i), i)).collect {
+      case (r, i) if r != i => (ids(r), ids(i))
+    }
 }

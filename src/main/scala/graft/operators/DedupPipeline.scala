@@ -70,29 +70,6 @@ final case class DedupConfig(
     confirmPrefilter: Boolean = true,
     ccMaxIter: Int = 25)
 
-/**
- * The flagship operator: near-duplicate detection + clustering over the
- * `(image_id, bytes, w, h, fmt, caption, phash)` table.
- *
- * Stage graph (shuffle boundaries marked ⇄):
- *
- *   scan → sketch (narrow; bytes projected away immediately after)
- *        ⇄ exact-dedup pre-aggregation (groupBy exact_key — removes
- *          exact-dup mass BEFORE LSH: the worst bucket skew becomes a
- *          pre-aggregation, SURVEY.md §7)
- *        → band explode (narrow)
- *        ⇄ bucket grouping → in-bucket pair generation (capped, counted)
- *        ⇄ pair dedup
- *        ⇄ confirm join (pairs × sketches × sketches, AQE skew-join)
- *        → edge filter (narrow)
- *        ⇄ connected components (large-star/small-star, O(log n) rounds)
- *        ⇄ representative relabel
- *
- * Four candidate sources are unioned, mirroring the reference's
- * multi-sketch records (`Signature.signatures`, one per ksize×moltype —
- * here one per modality): image MinHash bands, caption MinHash bands,
- * phash bit-blocks, caption SimHash bit-blocks.
- */
 /** Tracks DataFrames persisted while building a pipeline so callers can
   * release executor cache once the result is materialized (a long-lived
   * session running many pipelines would otherwise leak cache). */
@@ -102,6 +79,30 @@ final class CacheHandle {
   def release(): Unit = { dfs.foreach(_.unpersist(false)); dfs = Nil }
 }
 
+/**
+ * The flagship operator: near-duplicate detection + clustering over the
+ * `(image_id, bytes, w, h, fmt, caption, phash)` table.
+ *
+ * Stage graph (shuffle boundaries marked ⇄):
+ *
+ *   scan → sketch (narrow; bytes projected away immediately after)
+ *        ⇄ exact-dedup pre-aggregation (one window over exact_key —
+ *          removes exact-dup mass BEFORE LSH: the worst bucket skew
+ *          becomes a pre-aggregation, SURVEY.md §7)
+ *        → band explode (narrow)
+ *        ⇄ bucket grouping → in-bucket pair generation (capped, counted)
+ *        ⇄ pair dedup
+ *        ⇄ confirm join (pairs × sketches × sketches, AQE skew-join)
+ *        → edge filter (narrow)
+ *        ⇄ connected components (per-partition union-find contraction;
+ *          large-star/small-star rounds only when it spans partitions)
+ *        ⇄ representative relabel
+ *
+ * Five candidate sources are unioned, mirroring the reference's
+ * multi-sketch records (`Signature.signatures`, one per ksize×moltype —
+ * here one per modality): image MinHash bands, caption MinHash bands,
+ * phash bit-blocks, caption SimHash bit-blocks, and exact-phash groups.
+ */
 object DedupPipeline {
 
   /** Per-row sketching; `bytes` is projected away here and never shuffled.
@@ -122,19 +123,6 @@ object DedupPipeline {
       md5(concat_ws(":",
         coalesce(md5(col("bytes")), lit("nb")),
         coalesce(md5(encode(col("caption"), "UTF-8")), lit("nc")))).as("exact_key"))
-  }
-
-  /** Exact-duplicate pre-aggregation: representative per exact_key +
-    * member→representative edges. Returns (reps, exactEdges).
-    * Kept for the checkpointed variant; [[clusters]] uses the single-
-    * shuffle window formulation below. */
-  def exactDedup(sk: DataFrame): (DataFrame, DataFrame) = {
-    val reps = sk.groupBy(col("exact_key")).agg(min(col("image_id")).as("rep"))
-    val exactEdges = sk.select(col("exact_key"), col("image_id"))
-      .join(reps, "exact_key")
-      .where(col("image_id") =!= col("rep"))
-      .select(col("image_id").as("a"), col("rep").as("b"))
-    (reps, exactEdges)
   }
 
   /** Single-shuffle exact dedup: one window pass over `exact_key` tags

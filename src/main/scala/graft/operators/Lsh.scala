@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
  *    images) must lose their exact-dup mass upstream in the exact-dedup
  *    pre-aggregation (turns the worst skew into a groupBy).
  *
- * Dropped-bucket accounting is exposed via [[bucketStats]] — callers log
- * it to the lineage table (never silently).
+ * Oversize buckets are dropped whole, and this operator does not count
+ * them: a caller that needs the dropped mass counts it from the banded
+ * table (`bandKey` groups with more rows than their `cap`).
  */
 object Lsh {
 
@@ -71,19 +72,6 @@ object Lsh {
       .select(element_at($"ids", $"i" + 1).as("a"),
         explode(slice($"ids", $"i" + 2, size($"ids"))).as("b"))
       .dropDuplicates("a", "b")
-  }
-
-  /** Bucket-size accounting for lineage/metrics: (kept_buckets,
-    * dropped_buckets, max_bucket_seen). */
-  def bucketStats(banded: DataFrame, maxBucket: Int): (Long, Long, Long) = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    val sizes = banded.groupBy($"bandKey").agg(count(lit(1)).as("bn")).where($"bn" >= 2)
-    val r = sizes.agg(
-      sum(when($"bn" <= maxBucket, 1L).otherwise(0L)),
-      sum(when($"bn" > maxBucket, 1L).otherwise(0L)),
-      max($"bn")).as[(Option[Long], Option[Long], Option[Long])].first()
-    (r._1.getOrElse(0L), r._2.getOrElse(0L), r._3.getOrElse(0L))
   }
 
   /** Explode an array-of-band-keys column into (id, bandKey) rows, mixing

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.U64
@@ -141,6 +141,10 @@ object SignatureJson {
     val raw = spark.read.schema(sigSchema).option("multiLine", true).json(path)
     flatten(raw)
   }
+
+  /** Zero signatures, with [[read]]'s schema. */
+  def empty(spark: SparkSession): DataFrame =
+    flatten(spark.createDataFrame(java.util.Collections.emptyList[Row](), sigSchema))
 
   private def flatten(raw: DataFrame, extra: Seq[String] = Nil): DataFrame = {
     raw.select(extra.map(col) ++ Seq(

@@ -1,7 +1,11 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{ImageCodec, SyntheticCorpus}
 
@@ -93,27 +97,120 @@ class PipelineSpec extends AnyFunSuite {
     assert(labels(99L) === 99L) // singleton
   }
 
+  /** Union-find model over nodes 0 until n: node -> min id of its component. */
+  private def ufModel(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (0 until n).map(i => i.toLong -> find(i).toLong).toMap
+  }
+
+  /** CC labels of nodes 0 until n must partition identically to the model
+    * AND use the min-id label. Returns the SQL executions the (eager) CC
+    * call started. */
+  private def assertMatchesModel(n: Int, edges: Seq[(Long, Long)], clue: String): Int = {
+    val model = ufModel(n, edges)
+    val (lbl, execs) = sqlExecutions(ConnectedComponents.labelAll(
+      (0L until n.toLong).toDF("id"), edges.toDF("src", "dst")))
+    val got = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (0 until n).foreach { i =>
+      assert(got(i.toLong) === model(i.toLong), s"$clue node $i")
+    }
+    execs
+  }
+
+  /** Runs `body` with AQE off and 8 shuffle partitions: CC's first job
+    * keeps 8 partitions, so the contraction spans partitions and the star
+    * loop runs. Session confs are restored afterwards. */
+  private def multiPartition[T](body: => T): T = {
+    val conf = spark.conf
+    val aqe = conf.get("spark.sql.adaptive.enabled")
+    val parts = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", "8")
+    try body
+    finally {
+      conf.set("spark.sql.adaptive.enabled", aqe)
+      conf.set("spark.sql.shuffle.partitions", parts)
+    }
+  }
+
+  /** SQL executions (driver actions) `body` starts. `ConnectedComponents.run`
+    * takes one for its first checkpoint plus one per loop round. */
+  private def sqlExecutions[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    Bridge.drainListeners(sc, 30000)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      Bridge.drainListeners(sc, 30000)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def randomGraph(rnd: scala.util.Random, n: Int): Seq[(Long, Long)] =
+    Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+
   test("connected components: random graphs match a union-find model") {
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
       val n = 60 + rnd.nextInt(80)
-      val edges = Seq.fill(n)( (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong) )
-      // union-find model
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val model = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-      val got = ConnectedComponents.labelAll(
-          (0L until n.toLong).toDF("id"), edges.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // components must partition identically AND use the min-id label
-      (0 until n).foreach { i =>
-        assert(got(i.toLong) === model(i.toLong), s"trial $trial node $i")
+      assertMatchesModel(n, randomGraph(rnd, n), s"trial $trial")
+    }
+  }
+
+  test("cc contraction, multi-partition path: random graphs match a union-find model") {
+    val rnd = new scala.util.Random(23)
+    multiPartition {
+      for (trial <- 1 to 3) {
+        val n = 60 + rnd.nextInt(200)
+        val execs = assertMatchesModel(n, randomGraph(rnd, n), s"trial $trial")
+        assert(execs >= 2, s"trial $trial: no loop round ran, the path under test was skipped")
       }
     }
+  }
+
+  test("cc contraction, multi-partition path: the 200-node chain converges") {
+    val chain = (0L until 200L).map(i => (i, i + 1))
+    // the model labels every node 0
+    val execs = multiPartition(assertMatchesModel(201, chain, "chain"))
+    assert(execs >= 2, "no loop round ran, the path under test was skipped")
+  }
+
+  test("cc contraction: self-loops, duplicate edges and both orientations") {
+    val rnd = new scala.util.Random(5)
+    val n = 120
+    val base = randomGraph(rnd, n)
+    val edges = base ++ base.take(40) ++ base.take(40).map(_.swap) ++
+      (0 until 30).map(_ => { val v = rnd.nextInt(n).toLong; (v, v) }) ++
+      Seq((117L, 117L), (118L, 119L), (119L, 118L), (118L, 119L))
+    assert(assertMatchesModel(n, edges, "single-partition path") === 1)
+    assert(multiPartition(assertMatchesModel(n, edges, "multi-partition path")) >= 2)
+  }
+
+  test("cc single-partition path: no loop round runs on a small graph") {
+    val rnd = new scala.util.Random(3)
+    val n = 150
+    val edges = randomGraph(rnd, n)
+    // the test session runs AQE, which coalesces this edge set into one
+    // partition: the union-find sees every edge and its stars are final
+    val (lbl, execs) = sqlExecutions(ConnectedComponents.run(edges.toDF("src", "dst")))
+    val parts = lbl.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.getNumPartitions
+    }
+    assert(parts.nonEmpty && parts.forall(_ == 1), s"star edges in $parts partitions")
+    assert(execs === 1, s"$execs driver actions: a loop round ran after the contraction")
+    assertMatchesModel(n, edges, "single-partition path")
   }
 
   test("cc loop width: explicit override wins; auto honors the session ceiling") {
@@ -135,6 +232,10 @@ class PipelineSpec extends AnyFunSuite {
     val conf = spark.conf
     val before = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.shuffle.partitions", "64")
+    // without coalescing, the first job keeps all 64 partitions: the
+    // contraction spans partitions and the loop runs (a coalesced single
+    // partition would finish without any loop round)
+    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       val n = 600
       val rnd = new scala.util.Random(11)
@@ -159,7 +260,10 @@ class PipelineSpec extends AnyFunSuite {
       // session confs restored by the loop
       assert(conf.get("spark.sql.shuffle.partitions") === "64")
       assert(conf.get("spark.sql.adaptive.enabled") === "true")
-    } finally conf.set("spark.sql.shuffle.partitions", before)
+    } finally {
+      conf.set("spark.sql.shuffle.partitions", before)
+      conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
   }
 
   test("connected components: adversarial chain converges (log-round guarantee)") {
