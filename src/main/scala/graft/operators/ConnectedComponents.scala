@@ -12,20 +12,16 @@ import org.apache.spark.sql.functions._
  * assignments, not tree shape (SURVEY.md §2.4 Q7).
  *
  * Scale design:
- *  - the first job (the one that runs the caller's upstream plan) also
- *    contracts the edge set: after the canonical `distinct`, a union-find
- *    over each partition turns its edges into `(min id, member)` stars.
- *    Node set and connectivity are kept, so are components and labels;
- *  - when that job has one partition, the union-find saw every edge and
- *    its stars are the answer: no loop round runs. The path is chosen by
- *    the partition count Spark's planning gave the edge set, not by a
- *    size threshold;
- *  - otherwise large-star / small-star rounds run on the contracted
- *    edges, provably convergent in O(log n) rounds on any graph (vs
- *    min-label propagation's O(diameter) — adversarial dup chains are
- *    real at web scale). A round is two windows (min over each node's
- *    neighborhood, partitioned by node id) plus a `distinct`, with AQE
- *    off: one job per round;
+ *  - the first job (the one that runs the caller's upstream plan) writes
+ *    the canonical `distinct` edge set. When that job has one partition,
+ *    a union-find over it gives the min-id labels directly and no round
+ *    runs. The path is chosen by the partition count Spark's planning
+ *    gave the edge set, not by a size threshold;
+ *  - otherwise large-star / small-star rounds run, provably convergent in
+ *    O(log n) rounds on any graph (vs min-label propagation's O(diameter)
+ *    — adversarial dup chains are real at web scale). A round is two
+ *    windows (min over each node's neighborhood, partitioned by node id)
+ *    plus a `distinct`, with AQE off: one job per round;
  *  - `localCheckpoint` per round cuts the lineage chain (on a cluster this
  *    becomes a checkpoint-table write, giving partition-exact resume).
  */
@@ -60,7 +56,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
   /**
    * @param edges two Long columns `src`, `dst` (undirected, dups ok).
    * @param loopShufflePartitions explicit in-loop shuffle width (0 = size
-   *        from the contracted edge count via [[chooseLoopWidth]]).
+   *        from the edge count via [[chooseLoopWidth]]).
    * @param edgesPerPartition target edges per reducer when auto-sizing.
    * @return DataFrame (id: Long, component: Long) — component = min node
    *         id reachable; covers only nodes appearing in `edges`.
@@ -71,74 +67,55 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // The first checkpoint drags the caller's WHOLE upstream plan with
+    // The initial checkpoint drags the caller's WHOLE upstream plan with
     // it (sketching, banding, confirm at corpus scale) — it must run
-    // under the session's own parallelism and AQE settings. The same job
-    // contracts each partition to a star forest, and the contracted edge
-    // count and signature ride on it as observed metrics (no separate
-    // count action).
+    // under the session's own parallelism and AQE settings. The edge
+    // count rides on the SAME job as an observed metric (no separate
+    // count action), and is only requested when auto-sizing needs it.
     val obs0 = org.apache.spark.sql.Observation()
-    val contracted = edges.select($"src", $"dst").where($"src" =!= $"dst")
+    var e = edges.select($"src", $"dst").where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
       .distinct()
-      .as[(Long, Long)].mapPartitions(contract).toDF("src", "dst")
-      .observe(obs0, count(lit(1)).as("edges"), edgeSig.as("sig"))
+      .observe(obs0, count(lit(1)).as("edges"))
       .localCheckpoint(true)
 
-    // One partition means the union-find saw every edge: its stars are
-    // already the min-rooted star forest the loop converges to.
-    val stars = if (contracted.queryExecution.toRdd.getNumPartitions <= 1) contracted
-      else starLoop(contracted, obs0, maxIter, loopShufflePartitions, edgesPerPartition)
+    // One partition means one task holds every edge: a union-find over
+    // it labels every node with its component's min id, the answer the
+    // loop converges to. It runs lazily and narrow over that same
+    // checkpointed partition, so it costs no job of its own.
+    if (e.queryExecution.toRdd.getNumPartitions <= 1) {
+      logInfo("[cc] one partition: union-find, no loop round")
+      return e.as[(Long, Long)].mapPartitions(components).toDF("id", "component")
+    }
 
-    // The edge set is a star stored canonically as (src = component min,
-    // dst = member). Returned LAZY: the agg reads the checkpointed star
-    // edges, so consumers run it under the session confs (AQE on).
-    stars.select($"dst".as("id"), $"src".as("component"))
-      .union(stars.select($"src".as("id"), $"src".as("component")))
-      .groupBy($"id").agg(min($"component").as("component"))
-  }
-
-  /** Order-independent edge-set signature (bit_xor avoids ANSI overflow). */
-  private def edgeSig = coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))
-
-  /**
-   * Large-star / small-star rounds from the contracted edge set `e0` until
-   * a round leaves the edge set unchanged. `obs0` is the observation of
-   * `e0`'s checkpoint job: its edge count sizes the loop, and its
-   * signature seeds the convergence check, so an `e0` that is already
-   * stars converges after one round. Duplicate stars across partitions
-   * can only fail that first comparison (one more round), never pass it.
-   */
-  private def starLoop(e0: DataFrame, obs0: org.apache.spark.sql.Observation,
-      maxIter: Int, loopShufflePartitions: Int, edgesPerPartition: Long): DataFrame = {
-    val spark = e0.sparkSession
-    import spark.implicits._
-
-    // Per-round data (the edge set) is orders of magnitude smaller than
-    // the corpus, but each round is a chain of tiny shuffles: under AQE
-    // every query stage materializes as its own job, so a round costs 4-6
-    // driver scheduling barriers — a pure serial term. Run the loop with
-    // AQE off and an explicit width from chooseLoopWidth (one pipelined
-    // job per round locally; edge-count-proportional on a big graph);
-    // restore the session confs after. Session conf values are parsed
-    // defensively BEFORE anything is mutated (a non-numeric value, e.g. a
-    // managed platform's "auto", must not leave AQE disabled).
+    // From here on, per-round data (the edge set) is orders of magnitude
+    // smaller than the corpus, but each round is a chain of tiny shuffles:
+    // under AQE every query stage materializes as its own job, so a round
+    // costs 4-6 driver scheduling barriers — a pure serial term that
+    // dominates the pipeline's scaling efficiency. Run the loop with AQE
+    // off and an explicit width from chooseLoopWidth (one pipelined job
+    // per round locally; edge-count-proportional on a big graph); restore
+    // the session confs after. Session conf values are parsed defensively
+    // BEFORE anything is mutated (a non-numeric value, e.g. a managed
+    // platform's "auto", must not leave AQE disabled for the session).
     val conf = spark.conf
     val aqeBefore = conf.get("spark.sql.adaptive.enabled", "true")
     val partsBefore = conf.get("spark.sql.shuffle.partitions", "200")
     val sessionParts = scala.util.Try(partsBefore.trim.toInt).getOrElse(200)
-    val m0 = obs0.get
-    var lastSig = (m0("edges").asInstanceOf[Long], m0("sig").asInstanceOf[Long])
-    val loopWidth = chooseLoopWidth(lastSig._1, loopShufflePartitions,
-      sessionParts, edgesPerPartition)
+    // explicit override short-circuits: the edge count is irrelevant then,
+    // so don't even read the observed metric (ADVICE r3). Otherwise it
+    // came for free with the checkpoint job above.
+    val loopWidth = if (loopShufflePartitions > 0) loopShufflePartitions
+      else chooseLoopWidth(obs0.get("edges").asInstanceOf[Long], 0,
+        sessionParts, edgesPerPartition)
     logInfo(s"[cc] loop shuffle width=$loopWidth (session=$partsBefore)")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
     try {
 
-    var e = e0
     var iter = 0
     var converged = false
+    var lastSig: (Long, Long) = (-1L, -1L)
     val wSrc = org.apache.spark.sql.expressions.Window.partitionBy($"src")
     while (!converged && iter < maxIter) {
       // ---- large-star: for every node u, connect its larger neighbors to
@@ -157,15 +134,18 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       //      emitted per-row with duplicates — the terminal distinct dedups)
       val dir = ls.select(greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
         .withColumn("m", min($"dst").over(wSrc))
-      // the signature is an OBSERVED metric of the checkpoint job itself —
-      // one driver barrier per round, not two
+      // the order-independent edge-set signature (bit_xor avoids ANSI
+      // overflow) is an OBSERVED metric of the checkpoint job itself —
+      // one driver barrier per round, not two (checkpoint + separate agg
+      // was half the loop's serial term)
       val obs = org.apache.spark.sql.Observation()
       val ss = dir.select($"dst".as("src"), $"m".as("dst"))
         .union(dir.select($"src", $"m".as("dst")))
         .where($"src" =!= $"dst")
         .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
         .distinct()
-        .observe(obs, count(lit(1)).as("edges"), edgeSig.as("sig"))
+        .observe(obs, count(lit(1)).as("edges"),
+          coalesce(bit_xor(xxhash64($"src", $"dst")), lit(0L)).as("sig"))
         .localCheckpoint(true)
 
       val m = obs.get
@@ -176,11 +156,20 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       iter += 1
       logInfo(s"[cc] round $iter edges=${sig._1} sig=${sig._2} converged=$converged")
     }
-    // no maxIter=0 escape hatch: stopping early would return partly
-    // contracted stars, which are NOT components — an error beats a
-    // silently non-transitive labeling
+    // no maxIter=0 escape hatch: skipping the loop would return
+    // min-direct-neighbor labels, which are NOT components — an error
+    // beats a silently non-transitive labeling
     require(converged, s"connected components did not converge in $maxIter rounds")
-    e
+
+    // After convergence the edge set is a star stored canonically as
+    // (src = component min, dst = member). Returned LAZY: the agg reads
+    // the checkpointed star edges, so consumers run it under the restored
+    // session confs (AQE on) — and the loop pays no extra barrier for it
+    // (round-3's eager checkpoint here was one more driver action buying
+    // nothing: the plan below is two narrow scans of cached blocks).
+    e.select($"dst".as("id"), $"src".as("component"))
+      .union(e.select($"src".as("id"), $"src".as("component")))
+      .groupBy($"id").agg(min($"component").as("component"))
 
     } finally {
       conf.set("spark.sql.adaptive.enabled", aqeBefore)
@@ -189,15 +178,13 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
   }
 
   /**
-   * Contract one partition's edges: a union-find over them, emitted as one
-   * `(root, member)` star edge per non-root node, root = the min id of its
-   * local component. Node set and connectivity are unchanged, so are the
-   * components and their min-id labels.
+   * Union-find over one partition's edges: `(node, min id of its
+   * component)` for every node in them.
    */
-  private def contract(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+  private def components(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
     val uf = new UnionFind
     edges.foreach { case (a, b) => uf.union(uf.index(a), uf.index(b)) }
-    uf.stars
+    uf.labels
   }
 
   /**
@@ -276,9 +263,7 @@ private final class UnionFind {
     if (ids(ra) < ids(rb)) parent(rb) = ra else if (ra != rb) parent(ra) = rb
   }
 
-  /** One `(root id, member id)` edge per non-root node. */
-  def stars: Iterator[(Long, Long)] =
-    Iterator.range(0, n).map(i => (find(i), i)).collect {
-      case (r, i) if r != i => (ids(r), ids(i))
-    }
+  /** `(node id, root id)` for every node. */
+  def labels: Iterator[(Long, Long)] =
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
 }

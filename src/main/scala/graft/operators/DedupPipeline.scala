@@ -94,8 +94,8 @@ final class CacheHandle {
  *        ⇄ pair dedup
  *        ⇄ confirm join (pairs × sketches × sketches, AQE skew-join)
  *        → edge filter (narrow)
- *        ⇄ connected components (per-partition union-find contraction;
- *          large-star/small-star rounds only when it spans partitions)
+ *        ⇄ connected components (one union-find when the edge set is one
+ *          partition, else large-star/small-star rounds)
  *        ⇄ representative relabel
  *
  * Five candidate sources are unioned, mirroring the reference's

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -123,8 +122,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** Runs `body` with AQE off and 8 shuffle partitions: CC's first job
-    * keeps 8 partitions, so the contraction spans partitions and the star
-    * loop runs. Session confs are restored afterwards. */
+    * keeps 8 partitions, so the star loop runs. Session confs are
+    * restored afterwards. */
   private def multiPartition[T](body: => T): T = {
     val conf = spark.conf
     val aqe = conf.get("spark.sql.adaptive.enabled")
@@ -161,56 +160,32 @@ class PipelineSpec extends AnyFunSuite {
   private def randomGraph(rnd: scala.util.Random, n: Int): Seq[(Long, Long)] =
     Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
 
+  /** CC must match the model on both of its paths: plain, where the test
+    * session's AQE coalesces the edge set into one partition and no loop
+    * round runs, and under [[multiPartition]], where the loop runs. */
+  private def assertBothPaths(n: Int, edges: Seq[(Long, Long)], clue: String): Unit = {
+    val single = assertMatchesModel(n, edges, s"$clue, single-partition path")
+    assert(single === 1, s"$clue: $single driver actions, a loop round ran on one partition")
+    val multi = multiPartition(assertMatchesModel(n, edges, s"$clue, multi-partition path"))
+    assert(multi >= 2, s"$clue: no loop round ran, the multi-partition path was skipped")
+  }
+
   test("connected components: random graphs match a union-find model") {
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
       val n = 60 + rnd.nextInt(80)
-      assertMatchesModel(n, randomGraph(rnd, n), s"trial $trial")
+      assertBothPaths(n, randomGraph(rnd, n), s"trial $trial")
     }
   }
 
-  test("cc contraction, multi-partition path: random graphs match a union-find model") {
-    val rnd = new scala.util.Random(23)
-    multiPartition {
-      for (trial <- 1 to 3) {
-        val n = 60 + rnd.nextInt(200)
-        val execs = assertMatchesModel(n, randomGraph(rnd, n), s"trial $trial")
-        assert(execs >= 2, s"trial $trial: no loop round ran, the path under test was skipped")
-      }
-    }
-  }
-
-  test("cc contraction, multi-partition path: the 200-node chain converges") {
-    val chain = (0L until 200L).map(i => (i, i + 1))
-    // the model labels every node 0
-    val execs = multiPartition(assertMatchesModel(201, chain, "chain"))
-    assert(execs >= 2, "no loop round ran, the path under test was skipped")
-  }
-
-  test("cc contraction: self-loops, duplicate edges and both orientations") {
+  test("connected components: self-loops, duplicate edges and both orientations") {
     val rnd = new scala.util.Random(5)
     val n = 120
     val base = randomGraph(rnd, n)
     val edges = base ++ base.take(40) ++ base.take(40).map(_.swap) ++
       (0 until 30).map(_ => { val v = rnd.nextInt(n).toLong; (v, v) }) ++
       Seq((117L, 117L), (118L, 119L), (119L, 118L), (118L, 119L))
-    assert(assertMatchesModel(n, edges, "single-partition path") === 1)
-    assert(multiPartition(assertMatchesModel(n, edges, "multi-partition path")) >= 2)
-  }
-
-  test("cc single-partition path: no loop round runs on a small graph") {
-    val rnd = new scala.util.Random(3)
-    val n = 150
-    val edges = randomGraph(rnd, n)
-    // the test session runs AQE, which coalesces this edge set into one
-    // partition: the union-find sees every edge and its stars are final
-    val (lbl, execs) = sqlExecutions(ConnectedComponents.run(edges.toDF("src", "dst")))
-    val parts = lbl.queryExecution.analyzed.collect {
-      case l: LogicalRDD => l.rdd.getNumPartitions
-    }
-    assert(parts.nonEmpty && parts.forall(_ == 1), s"star edges in $parts partitions")
-    assert(execs === 1, s"$execs driver actions: a loop round ran after the contraction")
-    assertMatchesModel(n, edges, "single-partition path")
+    assertBothPaths(n, edges, "mixed edges")
   }
 
   test("cc loop width: explicit override wins; auto honors the session ceiling") {
@@ -232,9 +207,9 @@ class PipelineSpec extends AnyFunSuite {
     val conf = spark.conf
     val before = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.shuffle.partitions", "64")
-    // without coalescing, the first job keeps all 64 partitions: the
-    // contraction spans partitions and the loop runs (a coalesced single
-    // partition would finish without any loop round)
+    // without coalescing, the first job keeps all 64 partitions and the
+    // loop runs (a coalesced single partition takes the union-find path
+    // and runs no loop round)
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       val n = 600
@@ -267,11 +242,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("connected components: adversarial chain converges (log-round guarantee)") {
-    val chain = (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
-    val labels = ConnectedComponents.run(chain, maxIter = 25)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels.values.toSet === Set(0L))
-    assert(labels.size === 201)
+    // the model labels every node 0; the multi-partition run exercises the
+    // loop's round bound (maxIter = 25 for a 201-node path)
+    assertBothPaths(201, (0L until 200L).map(i => (i, i + 1)), "chain")
   }
 
   test("capedit pairs are caught by the suffix-array LCS rule, cold on all others") {
