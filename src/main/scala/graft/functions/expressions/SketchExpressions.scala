@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
  * UDF encoder round-trip — and codegen as a single static call, so the
  * surrounding plan stays inside whole-stage codegen.
  *
- * The UDF formulations in [[graft.functions.GraftFunctions]] are kept as
+ * Their UDF formulations are kept in test scope (`UdfOracles`) as
  * differential-test oracles (ExpressionsSpec asserts bit-equality).
  */
 object SketchKernels {

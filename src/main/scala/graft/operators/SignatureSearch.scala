@@ -1,14 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
-import graft.core.{MinHash, SketchConfig}
+import org.apache.spark.sql.types.StructType
+import graft.core.SketchConfig
+import graft.functions.GraftFunctions
 
 /**
  * Linear-index search — the Spark re-expression of `LinearIndex::find`
- * (`/root/reference/src/index/linear.rs:25-45`): the query sketch is
- * broadcast (closure-captured: a few KB) and every DB row is scored with
- * the reference predicates, a narrow filter over the sketch table:
+ * (`/root/reference/src/index/linear.rs:25-45`): the query sketch rides
+ * the plan as an array literal and every DB row is scored against it by
+ * the native codegen'd sketch kernels of [[GraftFunctions]], a narrow
+ * filter over the sketch table with the reference predicates:
  *
  *  - similarity (`search_minhashes`, `/root/reference/src/index/search.rs:3-5`):
  *    `node.similarity(query) > threshold` — strict `>`, combined-denominator
@@ -17,36 +24,35 @@ import graft.core.{MinHash, SketchConfig}
  *    `count_common(node, query) / |node.mins| > threshold` — the NODE's
  *    size in the denominator (`/root/reference/src/index.rs:146-160`).
  *
- * The SBT variant (Q4) needs no tree here: at corpus scale the pruning
- * role is played by LSH banding (SURVEY.md §2.4); for explicit searches a
- * broadcast filter is already a single narrow pass.
+ * The SBT variant (Q4) is [[indexed]]: a persisted posting table that
+ * one broadcast semi-join turns into the candidate set. At corpus scale
+ * the pruning role is played by LSH banding (SURVEY.md §2.4).
  */
 object SignatureSearch {
 
   /** A db row with a NULL mins column is a malformed sketch the loaders
-    * reject (FAILFAST) — if one reaches a score kernel anyway, fail with
-    * a diagnosis instead of an executor NPE mid-stage. */
-  private def requireMins(mins: Seq[Long]): Array[Long] = {
-    if (mins == null)
-      throw new IllegalArgumentException(
-        "sketch row with null mins reached the score kernel (malformed signature input)")
-    mins.toArray
-  }
+    * reject (FAILFAST) — if one reaches a search anyway, fail with a
+    * diagnosis instead of silently scoring it null (never a match). The
+    * check folds away when `mins` is not nullable. */
+  private def failOnNullMins(db: DataFrame): DataFrame =
+    db.where(when(col("mins").isNull, raise_error(lit(
+      "sketch row with null mins reached the score kernel (malformed signature input)")))
+      .otherwise(lit(true)))
 
   def linear(db: DataFrame, queryMins: Array[Long], cfg: SketchConfig,
       threshold: Double, mode: String,
-      queryAbunds: Array[Long] = null): DataFrame = {
-    val localCfg = cfg
-    val q = queryMins
+      queryAbunds: Array[Long] = null): DataFrame =
+    scored(failOnNullMins(db), queryMins, cfg, threshold, mode, queryAbunds)
+
+  /** `db`'s rows whose score against the query is `> threshold`, with the
+    * score appended; the kernels read the query as an array literal. */
+  private def scored(db: DataFrame, queryMins: Array[Long], cfg: SketchConfig,
+      threshold: Double, mode: String, queryAbunds: Array[Long]): DataFrame = {
+    val mins = col("mins")
+    val q = typedLit(queryMins)
     val score = mode match {
-      case "similarity" =>
-        udf((mins: Seq[Long]) => MinHash.compare(requireMins(mins), q, localCfg))
-      case "containment" =>
-        udf((mins: Seq[Long]) => {
-          val m = requireMins(mins)
-          if (m.isEmpty) 0.0
-          else MinHash.countCommon(m, q).toDouble / m.length
-        })
+      case "similarity" => GraftFunctions.jaccard(mins, q, cfg)
+      case "containment" => GraftFunctions.containment(mins, q)
       case "abundance" =>
         // published-sourmash `similarity(ignore_abundance=False)` =
         // angular similarity (1 − 2·acos(ρ)/π, published sourmash
@@ -57,26 +63,21 @@ object SignatureSearch {
         // semantics. A sketch without stored abundances scores as
         // flat counts of 1 (the sketch IS its support set then).
         val qa = if (queryAbunds != null) queryAbunds
-          else Array.fill(q.length)(1L)
-        require(qa.length == q.length, "queryAbunds/queryMins length mismatch")
+          else Array.fill(queryMins.length)(1L)
+        require(qa.length == queryMins.length, "queryAbunds/queryMins length mismatch")
         // The MinHash/finch surface names the multiplicity column `abunds`
         // (the reference's field name, src/lib.rs:45); some signature
         // frames carry `abundances`. Resolve whichever is present; a
         // sketch table with neither scores with flat counts of 1.
-        val abundCol =
-          if (db.columns.contains("abunds")) col("abunds")
-          else if (db.columns.contains("abundances")) col("abundances")
-          else lit(null).cast("array<long>")
-        return db.withColumn("score",
-          udf((mins: Seq[Long], abunds: Seq[Long]) => {
-            val m = requireMins(mins)
-            val a = if (abunds != null) abunds.toArray else Array.fill(m.length)(1L)
-            MinHash.angularSimilarity(m, a, q, qa)
-          }).apply(col("mins"), abundCol))
-          .where(col("score") > threshold)
+        val flat = array_repeat(lit(1L), size(mins))
+        val abunds =
+          if (db.columns.contains("abunds")) coalesce(col("abunds"), flat)
+          else if (db.columns.contains("abundances")) coalesce(col("abundances"), flat)
+          else flat
+        GraftFunctions.angularSimilarity(mins, abunds, q, typedLit(qa))
       case other => throw new IllegalArgumentException(s"unknown mode $other")
     }
-    db.withColumn("score", score(col("mins")))
+    db.withColumn("score", score)
       .where(col("score") > threshold) // strict >, per the reference
   }
 
@@ -91,29 +92,52 @@ object SignatureSearch {
     db.select(col("filename"), explode(col("mins")).as("h"))
       .write.mode("overwrite").parquet(path)
 
+  /** The posting layout [[buildIndex]] writes. */
+  private val PostingSchema = StructType.fromDDL("filename STRING, h BIGINT")
+
   /**
    * Index-backed search (`SBT::find` re-expressed,
    * `/root/reference/src/index/sbt.rs:147-175`): both reference
    * predicates are positive only when the sketches share ≥ 1 hash, so
    * the posting-list pre-filter is EXACT — no false negatives, the
    * deterministic counterpart of the Bloom overestimate's no-false-prune
-   * guarantee (`sbt.rs:249-251`). The query's hash list (≤ num entries)
-   * broadcasts; only candidate signatures are scored with the exact
-   * kernel. Results are identical to [[linear]] for any threshold > 0.
+   * guarantee (`sbt.rs:249-251`). The postings are read with their known
+   * schema (no schema-inference job), filtered to the query's hashes by
+   * an `IN` over the hash literals, and their `filename` column is the
+   * build side of ONE broadcast `left_semi` join over the sketch table —
+   * a semi-join keeps each db row once, so no `distinct` shuffle runs.
+   * Scores come from [[linear]]'s kernels. Catalyst pushes the score
+   * predicate below the semi-join (a deterministic filter on its probe
+   * side), so every db row is still scored, as in [[linear]]: the index
+   * adds the posting scan and saves no scoring yet. Results are
+   * identical to [[linear]] for any threshold > 0.
    */
   def indexed(db: DataFrame, indexPath: String, queryMins: Array[Long],
       cfg: SketchConfig, threshold: Double, mode: String,
       queryAbunds: Array[Long] = null): DataFrame = {
-    val spark = db.sparkSession
-    import spark.implicits._
     require(threshold > 0.0,
       "indexed search requires a positive threshold (zero-overlap rows score 0)")
-    val qdf = queryMins.toSeq.toDF("h")
-    val cands = spark.read.parquet(indexPath)
-      .join(broadcast(qdf), "h") // postings pruned by the tiny query hash set
-      .select(col("filename")).distinct()
-    linear(db.join(broadcast(cands), Seq("filename"), "left_semi"),
+    val postings = db.sparkSession.read.schema(PostingSchema).parquet(indexPath)
+    requirePostings(postings, indexPath)
+    val cands = postings.where(col("h").isin(queryMins.toSeq: _*)).select(col("filename"))
+    scored(failOnNullMins(db).join(broadcast(cands), Seq("filename"), "left_semi"),
       queryMins, cfg, threshold, mode, queryAbunds)
+  }
+
+  /** Reading with a given schema turns absent columns into nulls, i.e.
+    * zero candidates: check one footer on the driver (no Spark job) so a
+    * directory that is not a posting index fails loudly instead. */
+  private def requirePostings(postings: DataFrame, indexPath: String): Unit = {
+    val file = postings.inputFiles.headOption.getOrElse(
+      throw new IllegalArgumentException(s"posting index $indexPath holds no parquet file"))
+    val conf = postings.sparkSession.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    val found = try new ParquetToSparkSchemaConverter()
+      .convert(reader.getFooter.getFileMetaData.getSchema)
+      finally reader.close()
+    val ok = PostingSchema.forall(f => found.exists(g => g.name == f.name && g.dataType == f.dataType))
+    if (!ok) throw new IllegalArgumentException(
+      s"$indexPath is not a posting index: its files hold ${found.toDDL}, not ${PostingSchema.toDDL}")
   }
 
   /**

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MinHash, SketchConfig, U64}
 import graft.functions.GraftFunctions._
+import graft.functions.UdfOracles._
 import graft.operators.SparkTestSession
 import scala.util.Random
 

@@ -1,0 +1,109 @@
+package graft.functions
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+import graft.core._
+import graft.sources.ImageCodec
+
+/**
+ * UDF formulations of the native codegen'd kernels in [[GraftFunctions]]
+ * — the differential-test oracles ExpressionsSpec compares bit for bit
+ * against the Catalyst expressions. Each scores through the plain
+ * `graft.core` kernel behind a Scala UDF, so a mismatch isolates the
+ * expression's `ArrayData` / codegen layer.
+ */
+object UdfOracles {
+
+  /** UDF formulation of [[GraftFunctions.captionMinhash]]. */
+  def captionMinhashUdf(caption: Column, cfg: SketchConfig): Column = {
+    val k = cfg.ksize; val seed = cfg.seed; val localCfg = cfg
+    val f = udf((s: String) =>
+      if (s == null) Array.emptyLongArray
+      else MinHash.sketchHashes(Shingles.charShingleHashes(s, k, seed), localCfg))
+    f(caption)
+  }
+
+  /** UDF formulation of [[GraftFunctions.downsampleMins]]. */
+  def downsampleMinsUdf(mins: Column, newMaxHash: Long): Column = {
+    val f = udf((m: Seq[Long]) =>
+      if (m == null) null else MinHash.downsample(m.toArray, null, newMaxHash)._1)
+    f(mins)
+  }
+
+  /** UDF formulation of [[GraftFunctions.captionSimhash]]. */
+  def captionSimhashUdf(caption: Column, ksize: Int, seed: Long = 42L): Column = {
+    val f = udf((s: String) =>
+      if (s == null) 0L else Shingles.simhash64(Shingles.charShingleHashes(s, ksize, seed)))
+    f(caption)
+  }
+
+  /** UDF formulation of [[GraftFunctions.captionLcs]]. */
+  def captionLcsUdf(a: Column, b: Column): Column = {
+    val f = udf((x: String, y: String) =>
+      if (x == null || y == null) null
+      else java.lang.Integer.valueOf(SuffixArrays.lcsLen(x, y)))
+    f(a, b)
+  }
+
+  /** UDF formulation of [[GraftFunctions.imageMinhash]]. */
+  def imageMinhashUdf(bytes: Column, fmt: Column, cfg: SketchConfig, stride: Int = 4): Column = {
+    val k = cfg.ksize; val seed = cfg.seed; val localCfg = cfg; val s = stride
+    val f = udf((b: Array[Byte], f0: String) =>
+      if (b == null) Array.emptyLongArray
+      else {
+        val payload = ImageCodec.decode(b, f0) match {
+          case Some(d) => ImageCodec.normalizeForSketch(d.rgb)
+          case None => b
+        }
+        MinHash.sketchHashes(Shingles.byteShingleHashes(payload, k, s, seed), localCfg)
+      })
+    f(bytes, fmt)
+  }
+
+  /** UDF formulation of [[GraftFunctions.jaccard]]. */
+  def jaccardUdf(a: Column, b: Column, cfg: SketchConfig): Column = {
+    val localCfg = cfg
+    // null-FAITHFUL (null in -> null out), matching the native
+    // expression's null semantics — the twins must be bit-equal even on
+    // outer-join nulls
+    val f = udf((x: Array[Long], y: Array[Long]) =>
+      if (x == null || y == null) null.asInstanceOf[java.lang.Double]
+      else java.lang.Double.valueOf(MinHash.compare(x, y, localCfg)))
+    f(a, b)
+  }
+
+  /** UDF formulation of [[GraftFunctions.containment]]. */
+  def containmentUdf(a: Column, b: Column): Column = {
+    // null-faithful like jaccardUdf — see there
+    val f = udf((x: Array[Long], y: Array[Long]) =>
+      if (x == null || y == null) null.asInstanceOf[java.lang.Double]
+      else java.lang.Double.valueOf(MinHash.containment(x, y)))
+    f(a, b)
+  }
+
+  /** UDF formulation of [[GraftFunctions.minhashBands]]. */
+  def minhashBandsUdf(mins: Column, bands: Int, rowsPerBand: Int, seed: Long = 42L): Column = {
+    val nb = bands; val r = rowsPerBand; val s = seed
+    val f = udf((m: Array[Long]) => {
+      if (m == null || m.isEmpty) Array.emptyLongArray
+      else {
+        val n = math.min(nb, (m.length + r - 1) / r)
+        val out = new Array[Long](n)
+        var i = 0
+        while (i < n) {
+          val from = i * r
+          val until = math.min(from + r, m.length)
+          val bb = java.nio.ByteBuffer.allocate((until - from) * 8)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          var j = from
+          while (j < until) { bb.putLong(m(j)); j += 1 }
+          // mix the band index into the key so band i and band j never share buckets
+          out(i) = Murmur3.hash64(bb.array(), s + i)
+          i += 1
+        }
+        out
+      }
+    })
+    f(mins)
+  }
+}

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
@@ -17,6 +17,28 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** `body`'s result with the SQL executions (driver actions) and the
+    * Spark jobs it started. */
+  def actions[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    Bridge.drainListeners(sc, 30000)
+    val execs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      Bridge.drainListeners(sc, 30000)
+      (r, execs.get, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {
@@ -109,10 +131,10 @@ class PipelineSpec extends AnyFunSuite {
 
   /** CC labels of nodes 0 until n must partition identically to the model
     * AND use the min-id label. Returns the SQL executions the (eager) CC
-    * call started. */
+    * call started: one for its first checkpoint plus one per loop round. */
   private def assertMatchesModel(n: Int, edges: Seq[(Long, Long)], clue: String): Int = {
     val model = ufModel(n, edges)
-    val (lbl, execs) = sqlExecutions(ConnectedComponents.labelAll(
+    val (lbl, execs, _) = SparkTestSession.actions(ConnectedComponents.labelAll(
       (0L until n.toLong).toDF("id"), edges.toDF("src", "dst")))
     val got = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0 until n).foreach { i =>
@@ -135,26 +157,6 @@ class PipelineSpec extends AnyFunSuite {
       conf.set("spark.sql.adaptive.enabled", aqe)
       conf.set("spark.sql.shuffle.partitions", parts)
     }
-  }
-
-  /** SQL executions (driver actions) `body` starts. `ConnectedComponents.run`
-    * takes one for its first checkpoint plus one per loop round. */
-  private def sqlExecutions[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    Bridge.drainListeners(sc, 30000)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
-        case _ =>
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      Bridge.drainListeners(sc, 30000)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
   }
 
   private def randomGraph(rnd: scala.util.Random, n: Int): Seq[(Long, Long)] =
