@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -16,26 +15,22 @@ import scala.collection.mutable
  *
  * Usage: sbt "runMain graft.BenchExtra d02_ngram_jaccard e01_knn_bruteforce"
  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+ * SPARK_GRAFT_CPUS defaults to the JVM's available processors;
+ * SPARK_GRAFT_PLANS_ONLY=<dir> writes each query's formatted plan to
+ * <dir>/<name>.txt and runs nothing.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = Sessions.builder("graft-bench-extra", cpus)
       .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "33554432")
       .config("spark.local.dir",
         if (new java.io.File("/dev/shm").isDirectory) {
           val d = new java.io.File("/dev/shm/graft-spark"); d.mkdirs()
           d.getAbsolutePath
         } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

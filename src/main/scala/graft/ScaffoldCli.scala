@@ -352,11 +352,8 @@ object ScaffoldCli {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaffold").getOrCreate()
+    val spark = Sessions.builder("graft-scaffold", 32)
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try { run(spark, cfg); () } finally spark.stop()
   }

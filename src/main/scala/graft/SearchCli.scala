@@ -159,13 +159,8 @@ object SearchCli {
     val cfg = parse(args)
     val existing =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = existing.getOrElse(SparkSession.builder()
-      .master("local[*]")
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = existing.getOrElse(
+      Sessions.builder("graft-search", 32).master("local[*]").getOrCreate())
     try {
       val (results0, report) = search(spark, cfg)
       // one scan of the database corpus, not four: report.collect,

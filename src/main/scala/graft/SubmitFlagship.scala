@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.DedupPipeline
 import graft.sources.SyntheticCorpus
 
@@ -33,16 +32,7 @@ object SubmitFlagship {
   def main(args: Array[String]): Unit = {
     val rows = args.lift(0).map(_.toLong).getOrElse(600000L)
     val width = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .appName("graft-flagship-submit")
-      .config("spark.sql.shuffle.partitions", width.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("graft-flagship-submit", width).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // JIT warmup at toy scale so the timed run measures the pipeline,

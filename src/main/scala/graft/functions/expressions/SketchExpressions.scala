@@ -272,7 +272,7 @@ object SketchKernels {
   }
 
   /** Sign-bit hyperplane LSH keys over an ARRAY<FLOAT> embedding —
-    * codegen'd twin of the UDF in `Similarity.hyperplaneKeysUdf` (same
+    * codegen'd twin of the test oracle `UdfOracles.hyperplaneKeysUdf` (same
     * plane derivation, same accumulation order, same probe-key layout). */
   def hyperplaneKeys(v: ArrayData, dim: Int, nPlanes: Int, nTables: Int,
       seed: Long, probe: Boolean): ArrayData = {

@@ -64,10 +64,6 @@ final case class DedupConfig(
     // confirm-stage work and memory on pathological captions; any real
     // splice/containment decision resolves well within it
     lcsMaxChars: Int = 4096,
-    // the slim coincidence-reject pass in front of the confirm join
-    // (see [[DedupPipeline.prefilter]]); exposed as a dial for A/B
-    // measurement — the edge set is identical either way
-    confirmPrefilter: Boolean = true,
     ccMaxIter: Int = 25)
 
 /** Tracks DataFrames persisted while building a pipeline so callers can
@@ -246,19 +242,17 @@ object DedupPipeline {
     * fingerprint distances and the suffix-array substring pass, one row
     * per candidate pair. [[confirm]] = scores.where(edgeRule).
     *
-    * `lcsAll = false` (the pipeline default) short-circuits the
-    * suffix-array kernel: a pair already confirmed by one of the CHEAP
-    * rules (sketch jaccard / fingerprint hamming — vectorized per-pair
-    * O(num) work) is an edge no matter what `cap_lcs` says, so the
-    * O(len·log len) per-pair suffix sort is skipped and `cap_lcs` carries
-    * the sentinel -1 ("not computed"). The emitted EDGE SET is identical
-    * either way; at scale the majority of true-dup candidates confirm
-    * cheap, so the expensive kernel runs only on the minority that needs
-    * it. The rule-attribution spec passes `lcsAll = true` to score every
-    * rule on every pair. */
+    * `lcsAll = false` (the pipeline default) is the staged shape
+    * ([[scoresStaged]]): the slim coincidence-reject drops pairs no rule
+    * could confirm, and the suffix-array kernel is skipped where its
+    * value cannot change the pair's edge status (`cap_lcs` sentinels -1
+    * and -2). `lcsAll = true` is the full-scoring reference
+    * ([[scoresFull]]): every rule, the kernel included, scored on every
+    * candidate. The EMITTED EDGE SET is identical either way
+    * (spec-asserted); the rule-attribution spec passes `lcsAll = true`. */
   def scores(cands: DataFrame, sk: DataFrame, cfg: DedupConfig,
       lcsAll: Boolean = false): DataFrame =
-    if (lcsAll || !cfg.confirmPrefilter) scoresMonolithic(cands, sk, cfg, lcsAll)
+    if (lcsAll) scoresFull(cands, sk, cfg)
     else scoresStaged(cands, sk, cfg)
 
   /**
@@ -276,13 +270,13 @@ object DedupPipeline {
    * Why staged: fingerprint joint keys admit pairwise-coincidence
    * candidates in bulk (1.53M of 1.56M candidates at 600k rows), and a
    * candidate side that large is past any broadcast budget — a
-   * monolithic confirm join sort-merges the full ~2.5 KB sketch payload
+   * single-join confirm sort-merges the full ~2.5 KB sketch payload
    * per junk pair. Staging sorts the slim half for everyone and the
    * caption half for the near-edge-density survivors, which is also
    * exactly the shape that survives 10¹² rows (nothing wide ever
    * shuffles for a pair no rule could confirm).
    *
-   * The emitted EDGE SET is identical to the monolithic shape
+   * The emitted EDGE SET is identical to [[scoresFull]]'s
    * (spec-asserted); dropped pairs are provably non-edges.
    */
   private def scoresStaged(cands: DataFrame, sk: DataFrame,
@@ -306,9 +300,17 @@ object DedupPipeline {
       .withColumn("cap_contain",
         greatest(containment(col("cap_a"), col("cap_b")),
           containment(col("cap_b"), col("cap_a"))))
-    val lcsExpr = captionLcs(
-      substring(col("cn_a"), 1, cfg.lcsMaxChars),
-      substring(col("cn_b"), 1, cfg.lcsMaxChars))
+    // cheap-rule disjunction (everything but suffix_lcs — the only rule
+    // that reads cap_lcs) gates the expensive kernel; -1 = "already an
+    // edge, not computed". A second gate skips pairs where the kernel
+    // CANNOT MATTER: suffix_lcs only fires when its non-lcs
+    // corroborations hold ([[lcsRelevance]] — the rule with the lcs
+    // terms removed), so a pair failing them keeps the same edge status
+    // whatever cap_lcs would be; -2 = "irrelevant, not computed". This
+    // is the gate that matters at scale: fingerprint-coincidence
+    // candidates (img_sim = 0 junk) were paying the O(len·log len)
+    // suffix sort precisely because they confirmed nothing cheap —
+    // 36 µs/pair × millions.
     val cheapConfirmed = edgeRules(cfg)
       .collect { case (name, c) if name != "suffix_lcs" => c }
       .reduce(_ || _)
@@ -316,12 +318,14 @@ object DedupPipeline {
       .withColumn("cap_lcs",
         when(cheapConfirmed, lit(-1))
           .when(!lcsRelevance(cfg), lit(-2))
-          .otherwise(lcsExpr))
+          .otherwise(lcsExpr(cfg)))
       .withColumn("substr_hit", col("cap_lcs") >= cfg.substringMinLen)
   }
 
-  private def scoresMonolithic(cands: DataFrame, sk: DataFrame, cfg: DedupConfig,
-      lcsAll: Boolean): DataFrame = {
+  /** The full-scoring reference: one join of every candidate against
+    * the whole sketch payload, every rule scored, the suffix-array kernel
+    * on every pair (no sentinels). */
+  private def scoresFull(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
     val a = sk.select(
       col("vid").as("a"), col("cap_mins").as("cap_a"), col("img_mins").as("img_a"),
       col("cap_simhash").as("sh_a"), col("phash").as("ph_a"), col("cap_norm").as("cn_a"))
@@ -338,7 +342,7 @@ object DedupPipeline {
     // earlier merge hint PINNED sort-merge: AQE honors hints, so both
     // confirm joins shuffled AND sorted the wide sketch table twice even
     // when the candidate side was a few MB (round-4 probe, 2.6x slower).
-    val scored = cands.join(a, "a").join(b, "b")
+    cands.join(a, "a").join(b, "b")
       .withColumn("img_sim", jaccard(col("img_a"), col("img_b"), cfg.imgSketch))
       .withColumn("cap_sim", jaccard(col("cap_a"), col("cap_b"), cfg.capSketch))
       .withColumn("ph_ham", hamming64(col("ph_a"), col("ph_b")))
@@ -346,40 +350,21 @@ object DedupPipeline {
       .withColumn("cap_contain",
         greatest(containment(col("cap_a"), col("cap_b")),
           containment(col("cap_b"), col("cap_a"))))
-      // exact-substring pass (north rule): generalized-suffix-array
-      // longest common substring. Containment of the shorter caption is
-      // the special case lcs == min(len); unlike contains(), this also
-      // catches head/tail caption rewrites that keep a long shared chunk.
-      // Inputs are capped at lcsMaxChars (pathological megabyte captions
-      // must not blow the per-pair suffix sort; decisions resolve far
-      // below the cap)
-    val lcsExpr = captionLcs(
-      substring(col("cn_a"), 1, cfg.lcsMaxChars),
-      substring(col("cn_b"), 1, cfg.lcsMaxChars))
-    // cheap-rule disjunction (everything but suffix_lcs — the only rule
-    // that reads cap_lcs) gates the expensive kernel; -1 = "already an
-    // edge, not computed". A second gate skips pairs where the kernel
-    // CANNOT MATTER: suffix_lcs only fires when its non-lcs
-    // corroborations hold ([[lcsRelevance]] — the rule with the lcs
-    // terms removed), so a pair failing them keeps the same edge status
-    // whatever cap_lcs would be; -2 = "irrelevant, not computed". This
-    // is the gate that matters at scale: fingerprint-coincidence
-    // candidates (img_sim = 0 junk) were paying the O(len·log len)
-    // suffix sort precisely because they confirmed nothing cheap —
-    // 36 µs/pair × millions. The emitted EDGE SET is provably identical
-    // under both gates; the rule-attribution spec passes `lcsAll = true`
-    // to score every rule on every pair.
-    val cheapConfirmed = edgeRules(cfg)
-      .collect { case (name, c) if name != "suffix_lcs" => c }
-      .reduce(_ || _)
-    scored
-      .withColumn("cap_lcs",
-        if (lcsAll) lcsExpr
-        else when(cheapConfirmed, lit(-1))
-          .when(!lcsRelevance(cfg), lit(-2))
-          .otherwise(lcsExpr))
+      .withColumn("cap_lcs", lcsExpr(cfg))
       .withColumn("substr_hit", col("cap_lcs") >= cfg.substringMinLen)
   }
+
+  /** Exact-substring pass (north rule): generalized-suffix-array longest
+    * common substring of the normalized captions `cn_a`/`cn_b`.
+    * Containment of the shorter caption is the special case
+    * lcs == min(len); unlike contains(), this also catches head/tail
+    * caption rewrites that keep a long shared chunk. Inputs are capped at
+    * lcsMaxChars (pathological megabyte captions must not blow the
+    * per-pair suffix sort; decisions resolve far below the cap). */
+  private def lcsExpr(cfg: DedupConfig): Column =
+    captionLcs(
+      substring(col("cn_a"), 1, cfg.lcsMaxChars),
+      substring(col("cn_b"), 1, cfg.lcsMaxChars))
 
   /** The suffix_lcs rule's NON-lcs corroborations (both branches, lcs
     * terms removed): when false, no cap_lcs value can make the pair an
@@ -456,10 +441,10 @@ object DedupPipeline {
   }
 
   /** Confirm candidates with reference-semantics scores; emit edges.
-    * Pipeline mode uses the staged shape ([[scoresStaged]]): the slim
+    * Always the staged shape ([[scoresStaged]]): the slim
     * coincidence-reject runs inside the first scoring join, and only
     * the survivors see the caption payload. The edge set is provably
-    * identical to the monolithic shape (spec-asserted). */
+    * identical to the full-scoring reference (spec-asserted). */
   def confirm(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame =
     scores(cands, sk, cfg).where(edgeRule(cfg))
       .select(col("a"), col("b"), col("img_sim"), col("cap_sim"),

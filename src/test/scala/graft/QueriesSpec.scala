@@ -1052,7 +1052,7 @@ class QueriesSpec extends AnyFunSuite {
         Similarity.pqEncodeCol(col("embedding"), cbLit, m, ks, subDim).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     val viaUdf = emb.select(col("vec_id"),
-        Similarity.pqEncodeUdf(expr("transform(embedding, x -> cast(x as double))"),
+        graft.functions.UdfOracles.pqEncodeUdf(expr("transform(embedding, x -> cast(x as double))"),
           cbFlat, m, ks, subDim).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     assert(viaExpr.keySet === vecs.keySet)

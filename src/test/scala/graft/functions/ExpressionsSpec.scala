@@ -129,7 +129,7 @@ class ExpressionsSpec extends AnyFunSuite {
     for (probe <- Seq(true, false)) {
       val out = emb.select(
         Similarity.hyperplaneKeys($"embedding", 64, 9, 8, probe = probe).as("n"),
-        Similarity.hyperplaneKeysUdf($"embedding", 64, 9, 8, probe = probe).as("u"))
+        hyperplaneKeysUdf($"embedding", 64, 9, 8, probe = probe).as("u"))
         .collect()
       assert(out.nonEmpty)
       out.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"probe=$probe"))

@@ -7,8 +7,9 @@ import graft.sources.ImageCodec
 
 /**
  * UDF formulations of the native codegen'd kernels in [[GraftFunctions]]
- * — the differential-test oracles ExpressionsSpec compares bit for bit
- * against the Catalyst expressions. Each scores through the plain
+ * and [[graft.operators.Similarity]] — the differential-test oracles
+ * ExpressionsSpec and QueriesSpec compare bit for bit against the
+ * Catalyst expressions. Each scores through the plain
  * `graft.core` kernel behind a Scala UDF, so a mismatch isolates the
  * expression's `ArrayData` / codegen layer.
  */
@@ -105,5 +106,71 @@ object UdfOracles {
       }
     })
     f(mins)
+  }
+
+  /** UDF formulation of [[graft.operators.Similarity.hyperplaneKeys]]
+    * (same plane derivation, accumulation order, and probe layout). */
+  def hyperplaneKeysUdf(vec: Column, dim: Int, nPlanes: Int, nTables: Int,
+      seed: Long = 42L, probe: Boolean = false): Column = {
+    // plane components precomputed once (driver) and closed over — a tiny
+    // deterministic broadcast; ±1 components from murmur low bits
+    val planes: Array[Array[Array[Double]]] =
+      Array.tabulate(nTables, nPlanes, dim) { (t, p, i) =>
+        if ((Murmur3.hash64(s"$t:$p:$i", seed) & 1L) == 0L) 1.0 else -1.0
+      }
+    val perTable = if (probe) nPlanes + 1 else 1
+    val f = udf((v: Seq[Float]) => {
+      if (v == null) Array.emptyLongArray
+      else {
+        val out = new Array[Long](nTables * perTable)
+        var t = 0
+        while (t < nTables) {
+          var key = 0L
+          var p = 0
+          while (p < nPlanes) {
+            val comp = planes(t)(p)
+            var dot = 0.0
+            var i = 0
+            val n = math.min(v.length, comp.length)
+            while (i < n) { dot += comp(i) * v(i); i += 1 }
+            if (dot > 0) key |= (1L << p)
+            p += 1
+          }
+          out(t * perTable) = key * nTables + t // tag table index into the key
+          var q = 1
+          while (q < perTable) { // 1-bit probe keys
+            out(t * perTable + q) = (key ^ (1L << (q - 1))) * nTables + t
+            q += 1
+          }
+          t += 1
+        }
+        out
+      }
+    })
+    f(vec)
+  }
+
+  /** UDF formulation of [[graft.operators.Similarity.pqEncodeCol]] (same
+    * argmin tie rule, same accumulation order). */
+  def pqEncodeUdf(vec: Column, codebook: Array[Array[Double]],
+      m: Int, ks: Int, subDim: Int): Column = {
+    val f = udf((v: Seq[Double]) => {
+      if (v == null) null
+      else Array.tabulate(m) { j =>
+        var best = 0
+        var bestD = Double.MaxValue
+        var c = 0
+        while (c < ks) {
+          val cent = codebook(j * ks + c)
+          var s = 0.0
+          var i = 0
+          while (i < subDim) { val x = v(j * subDim + i) - cent(i); s += x * x; i += 1 }
+          if (s < bestD) { bestD = s; best = c }
+          c += 1
+        }
+        best
+      }
+    })
+    f(vec)
   }
 }

@@ -303,12 +303,10 @@ class PipelineSpec extends AnyFunSuite {
     val short = edgeSet(false)
     assert(full.nonEmpty)
     assert(short === full, "short-circuit changed the confirmed edge set")
-    // both gates are load-bearing: cheap-confirmed pairs skip the kernel
-    // (-1), and pairs where no lcs value could matter skip it too (-2).
-    // Pinned to the monolithic shape (confirmPrefilter = false) — the
-    // staged shape drops most -2 candidates before the kernel gate
-    val bySentinel = DedupPipeline.scores(cands, skReps,
-        cfg.copy(confirmPrefilter = false))
+    // both gates are load-bearing on the pipeline's staged shape:
+    // cheap-confirmed pairs skip the kernel (-1), and slim-reject
+    // survivors where no lcs value could matter skip it too (-2)
+    val bySentinel = DedupPipeline.scores(cands, skReps, cfg)
       .groupBy($"cap_lcs" === -1, $"cap_lcs" === -2).count()
       .collect().map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2)).toMap
     assert(bySentinel.getOrElse((true, false), 0L) > 0,
@@ -329,7 +327,7 @@ class PipelineSpec extends AnyFunSuite {
     val nCands = cands.count()
     // the slim reject may only drop pairs no rule could confirm: edges
     // from the COMPLETE scoring of every candidate (lcsAll — the
-    // monolithic all-pairs shape) must survive the staged path exactly
+    // full-scoring reference) must survive the staged path exactly
     val unfiltered = DedupPipeline.scores(cands, skReps, cfg, lcsAll = true)
       .where(DedupPipeline.edgeRule(cfg))
       .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

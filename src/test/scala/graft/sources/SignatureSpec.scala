@@ -35,6 +35,52 @@ class SignatureSpec extends AnyFunSuite {
     }
   }
 
+  test("signature JSON round-trip on a seeded table: toJson and write() reparse identically") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7L)
+    def mins(cfg: SketchConfig): Array[Long] =
+      MinHash.sketchHashes(Array.fill(400)(rnd.nextLong()), cfg)
+    // (filename, ksize, is_protein, num, max_hash): two ksizes, one
+    // protein sketch, bottom-k num=128 and scaled num=0 sketches (the
+    // scaled max_hash keeps mins above 2^63, i.e. negative as longs)
+    val scaledMax = 0xC000000000000000L
+    val sketches = Seq(
+      ("a.sig", 21, false, 128, 0L), ("a.sig", 31, false, 128, 0L),
+      ("a.sig", 21, true, 128, 0L), ("b.sig", 21, false, 0, scaledMax),
+      ("b.sig", 31, false, 0, scaledMax), ("c.sig", 31, false, 128, 0L))
+    val rows = sketches.zipWithIndex.map { case ((file, k, prot, num, maxHash), i) =>
+      val m = mins(SketchConfig(num = num, ksize = k, isProtein = prot, maxHash = maxHash))
+      val abund = if (i == 0) m.map(_ => 1L + rnd.nextInt(9)) else null
+      ("sourmash_signature", "", "0.murmur64", file, s"sig-$file", "CC0", 0.4,
+        i, num, k, 42L, maxHash, m, abund, prot)
+    }
+    val orig = rows.toDF("class", "email", "hash_function", "filename", "name",
+        "license", "version", "sketch_idx", "num", "ksize", "seed", "max_hash",
+        "mins", "abundances", "is_protein")
+      .withColumn("md5sum", SignatureJson.computeMd5sum(col("ksize"), col("mins")))
+      .select(SignatureJson.empty(spark).columns.map(col): _*)
+    assert(orig.schema.map(f => f.name -> f.dataType) ===
+      SignatureJson.empty(spark).schema.map(f => f.name -> f.dataType))
+    assert(orig.where(array_min(col("mins")) < 0L).count() > 0, "no min above 2^63")
+
+    def key(df: org.apache.spark.sql.DataFrame) =
+      df.select("name", "ksize", "is_protein", "md5sum", "mins", "num").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getString(3),
+          r.getSeq[Long](4), r.getInt(5))).sortBy(r => (r._1, r._2, r._3)).toSeq
+    val expected = key(orig)
+    assert(expected.length === 6)
+
+    val viaJson = java.nio.file.Files.createTempDirectory("sig_rt_json")
+    SignatureJson.toJson(orig).select(col("filename"), col("json")).as[(String, String)]
+      .collect().foreach { case (f, json) =>
+        java.nio.file.Files.writeString(viaJson.resolve(f), json) }
+    assert(key(SignatureJson.read(spark, s"$viaJson/*.sig")) === expected)
+
+    val viaWrite = java.nio.file.Files.createTempDirectory("sig_rt_write").toString
+    SignatureJson.write(orig, viaWrite)
+    assert(key(SignatureJson.read(spark, s"$viaWrite/*.sig")) === expected)
+  }
+
   test("v5 fixture linear search reproduces golden counts (reference sbt.rs:526-590)") {
     assumeFixtures()
     val db = SignatureJson.read(spark, s"$refData/.sbt.v5/*")
